@@ -1,45 +1,45 @@
-"""Benchmark harness (driver contract + BASELINE.md protocol).
+"""Benchmark harness for the operator battery, the flagship pipeline
+and the streaming drain, measured at the host's core count.
 
-Prints COMPACT JSON lines (each ≤ ~1 KB — the driver keeps only the
-tail of stdout, and round 2's full-artifact line outran that window,
-leaving the round machine-unreadable). Each section completion
-re-prints the compact summary, so the LAST stdout line is always a
-complete, parseable artifact:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-   "throughput": {...}, "streaming": {...}, "scaling": {...}}
-The FULL artifact (per-sample scaling data, notes, probes) is written
-to BENCH/latest_full.json on every emission.
+Sections (a default run measures all three, each fresh):
 
-- per-query wall times for the headline operator battery at
-  $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), executed to a
-  noop sink (full pipeline execution, no driver collect).
-- sustained events/sec on the flagship sliding-window pipeline over an
-  amplified event stream (xAMP self-replication of the input so the
-  measurement isn't dominated by fixed JVM/job overhead; row count
-  reported).
-- streaming drain: sustained rows/sec + p50/p99 micro-batch duration,
-  PLUS a live-feed harness measuring true window-emit latency
-  (files appended on a wall clock; latency = batch end − window end).
-- scaling efficiency N→4N cores (BASELINE.md sandbox protocol):
-  identical flagship job at local[8] vs local[32] in fresh JVMs,
-  shuffle partitions scaled with cores. HEADLINE estimator =
-  efficiency_8_to_32 over the best VALID adjacent same-window (32, 8)
-  sample pair, clamped at 1.0: a pair counts only when both samples
-  are condition-matched (steal < pair_steal_cap on each side AND
-  pre-sample bandwidth probes within 20%), because adjacency alone
-  let r3 pair a steal-drenched 8-core run with a clean 32-core run
-  and report an impossible 1.222 (host DRAM-bandwidth contention hits
-  the 32-core side ~4× harder and swings minute to minute — see
-  BENCH/BASELINE.md); headline_valid says whether any matched pair
-  existed, and cross-window best-of and median estimators + CPU/membw
-  hardware-ceiling controls ship beside it.
+- battery: per-query wall time for every ``HEADLINE`` query of
+  ``__spark_entry__.queries()`` at $SPARK_GRAFT_SF_DIR (default: the
+  sf0.1 test data), each run to a noop sink (full pipeline execution,
+  no collect) in one shared warm JVM. A query runs
+  up to 4 reps; it stops after 2 once one rep had steal < 500 jiffies
+  and the last rep did not improve > 20 % on the one before (still
+  warming). The kept time is the fastest steal-clean rep (the fastest
+  rep when none is clean), and its steal delta is recorded beside it.
+- flagship: sustained events/s of the sliding-window pipeline over the
+  event table replicated ``AMP``× (row count reported).
+- streaming: sustained rows/s and p50/p99 micro-batch duration of an
+  availableNow drain of the same amplified stream (best of 2 fresh
+  JVMs, each rep stamped with its steal delta; a steal-clean rep wins
+  over a faster noisy one), plus true window-emit latency on a live
+  wall-clock feed over a small (window, watermark, trigger,
+  state store) grid.
+
+Output contract: after each section the harness writes the full
+artifact to BENCH/latest_full.json (BENCH/latest_fast.json for a
+partial run or when SPARK_GRAFT_SF_DIR is set, so those never
+overwrite the default full-SF artifact) and prints a compact JSON summary of ≤ 1500 bytes on
+one stdout line. The last stdout line is therefore always a complete
+artifact holding only what this process measured:
+  {"metric": "headline_battery_seconds", "value": N, "unit": "sec",
+   "queries": {...}, "sf": ..., "throughput": {...}, "streaming": {...}}
 
 Usage:
-  python bench.py                 # full battery + scaling + streaming
-  python bench.py --no-scaling    # skip the two-JVM scaling runs
-  python bench.py --single 8      # internal: one flagship run at local[8]
-  python bench.py --stream 32     # internal: one streaming drain
-  python bench.py --live 8        # internal: live-feed emit latency
+  python bench.py                  # battery + flagship + streaming
+  python bench.py QUERY [QUERY..]  # battery restricted to these queries
+  python bench.py --stream-only    # streaming section only
+  python bench.py --stream N       # internal: one drain at local[N]
+  python bench.py --live N [WIN WM TRIG_MS] [rocksdb|hdfs]
+                                   # internal: one live-feed latency run
+
+Env: SPARK_GRAFT_SF_DIR (input dir), SPARK_GRAFT_CPUS (cores, default
+this process's CPU affinity), SPARK_GRAFT_BENCH_AMP (amplification,
+default 1024).
 """
 
 from __future__ import annotations
@@ -55,7 +55,7 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 AMP = int(os.environ.get("SPARK_GRAFT_BENCH_AMP", "1024"))
 
 HEADLINE = [
@@ -74,26 +74,25 @@ HEADLINE = [
     "dedup_simhash",
     "embedding_topk",
     "text_quality",
-    "cep_pattern",  # r6: battery grew to 16 queries
-    "text_repetition",  # r6: the zero-shuffle mode-frequency fold at sf
-    "cep_skip",  # r7: skip-till-next-match (pointer chain + equi joins)
-    "cep_kleene",  # r7: greedy-maximal Kleene-plus (run boundaries + joins)
-    "pack_bucketed_dense",  # r7: two-pass prefix-sum pack layout
+    "cep_pattern",
+    "text_repetition",
+    "cep_skip",
+    "cep_kleene",
+    "pack_bucketed_dense",
 ]
+
+BATTERY_STEAL_CAP = 500  # jiffies over a ≤ few-sec query ⇒ clean
+STREAM_STEAL_CAP = 1000  # jiffies over a whole drain subprocess ⇒ clean
 
 
 def _spark(master: str, parts: int):
     from windflow_spark.session import get_spark
 
-    import os as _os
-
-    _os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
     return get_spark(
         "windflow-bench", master=master, shuffle_partitions=parts,
         extra_conf={
             "spark.sql.autoBroadcastJoinThreshold": "64MB",
-            # throughput GC: the windowed-agg path is allocation-heavy;
-            # G1 pauses cost ~20% at 32 threads on this class of job
+            # throughput GC: the windowed-agg path is allocation-heavy
             "spark.driver.extraJavaOptions": "-XX:+UseParallelGC -XX:NewRatio=1",
         },
     )
@@ -104,34 +103,24 @@ def _noop(df) -> None:
 
 
 def _amp_path(amp: int) -> str:
-    # "_ts" = time-clustered layout (v2, round 4) — bumping the path
-    # invalidates stale randomly-partitioned dirs from earlier rounds.
-    # The SF tag keys the cache by SOURCE table too: a verify run at
-    # sf0.01 must not poison the sf0.1 artifact's amplified input
-    # (materialize_amplified only checks _SUCCESS existence).
+    """Cache dir of the amplified input, keyed by source SF and amp so
+    a run at another SF never reads this one's copy. "_ts" marks the
+    time-clustered layout."""
     sf_tag = Path(SF_DIR).name
     return f"/tmp/windflow_bench/events_{sf_tag}_amp{amp}_ts"
 
 
 def materialize_amplified(spark, sf_dir: str, amp: int, n_files: int = 256) -> str:
-    """Materialize the amplified event stream once: events replicated
+    """Write the amplified event stream once (reused while its
+    ``_SUCCESS`` marker exists) and return its path: events replicated
     ``amp``× with per-replica key/value/ts perturbation so parquet
-    can't RLE the copies away (realistic scan volume), written as
-    ``n_files`` files so the scan has enough splits to feed every core
-    (the local proxy for a many-split cluster scan).
+    can't RLE the copies away, as ``n_files`` files so the scan has a
+    split for every core.
 
-    Layout is TIME-CLUSTERED (repartitionByRange + sort on ts) — what
-    any real stream or time-partitioned Iceberg table gives you, and a
-    2.4× measured difference at 32 cores (7.9 → 3.3 s on 409.6 M
-    rows): with a random layout every scan task sees the full
-    (key × pane) domain, so its map-side hash-agg state is ~180k
-    entries (~18 MB) of random access, and 32 concurrent random-access
-    streams saturate the socket's memory-level parallelism — the
-    non-scaling component the sequential-bandwidth control never
-    showed. Time clustering shrinks per-task state to the few panes
-    the task's time slice covers (cache-resident), which is exactly
-    how the pane pre-aggregation behaves on a time-partitioned source
-    at cluster scale. Sorted files also compress ~40% smaller."""
+    The layout is time-clustered (repartitionByRange + sort on ts), as
+    a real stream or a time-partitioned table delivers it: each scan
+    task then sees only the few panes its time slice covers, so its
+    map-side partial-aggregation state stays cache-resident."""
     from pyspark.sql import functions as F
 
     path = _amp_path(amp)
@@ -160,12 +149,10 @@ def materialize_amplified(spark, sf_dir: str, amp: int, n_files: int = 256) -> s
 def flagship(spark, amp: int):
     """Transcripts-shaped flagship: Source→Map→Filter→keyBy→
     sliding_agg(TB 1h/15min sum+count)→sink over the materialized
-    amplified stream. sliding_agg is the engine's cost router: at this
-    input size it picks pane decomposition (pre-shrink to (key, pane)
-    partials instead of exploding every row ⌈win/slide⌉× — measured
-    direct 5.8 s vs pane 3.0 s at local[32] on 102.4 M rows), while the
-    sf0.1 battery's unamplified inputs stay on the direct plan.
-    Output-identical either way (test_windows::sliding_agg_auto)."""
+    amplified stream. sliding_agg routes by input size (pane
+    decomposition at this size, the direct plan on the unamplified
+    battery inputs); the output is identical either way
+    (test_windows::sliding_agg_auto)."""
     from pyspark.sql import functions as F
 
     from windflow_spark.api import Pipe
@@ -185,218 +172,19 @@ def flagship(spark, amp: int):
     )
 
 
-def run_single(cores: int, reps: int = 3) -> None:
-    """One flagship run in this JVM; prints rows + elapsed (scaling mode).
-    Scan warmed (page cache + JIT) via count; timed run measures the
-    full pipeline to a noop sink; best of ``reps`` in-JVM repeats.
-
-    Shuffle partitions: each size runs its own optimum (what a real
-    deployment does) — 1× cores at low parallelism (extra reduce waves
-    just add fixed overhead: 8@16 parts measured 23.8 s, 8@32 34.9 s vs
-    8@8 19.6 s), 2× cores at high parallelism (≥2 tasks/core overlap
-    steal-stalled stragglers: 32@64 parts 6.18 s vs 32@32 7.67 s; a
-    32@128 sweep read faster once but did not replicate under clean
-    steal — the round-3 clean-window samples all used 64)."""
-    spark = _spark(f"local[{cores}]", cores if cores <= 16 else 2 * cores)
-    materialize_amplified(spark, SF_DIR, AMP)
-    n_in = spark.read.parquet(_amp_path(AMP)).count()
-    df = flagship(spark, AMP)
-    _noop(df)  # warmup: page cache + codegen JIT
-    s0 = _steal_jiffies()
-    el = min(_timed(df) for _ in range(reps))
-    print(json.dumps({"cores": cores, "rows_in": n_in, "sec": el,
-                      "steal_jiffies": _steal_jiffies() - s0}), flush=True)
+COMPACT_MAX_BYTES = 1500
 
 
-def _cpu_worker(iters: int) -> float:
-    """Pure-CPU kernel; returns its own compute seconds (in-worker
-    timing excludes pool/IPC overhead from the control)."""
-    t0 = time.time()
-    x = 1
-    for _ in range(iters):
-        x = (x * 1103515245 + 12345) & 0x7FFFFFFF
-    return time.time() - t0 + (x & 0)
-
-
-def _membw_worker(args) -> float:
-    """DRAM-bandwidth kernel: repeated sums over an array ≫ LLC.
-    Allocates + warms first, times only the streaming passes (the first
-    touch pays page faults that would otherwise swamp the signal)."""
-    import numpy as np
-
-    passes, mb = args
-    a = np.ones((mb * 1024 * 1024) // 8, dtype=np.float64)
-    float(a.sum())  # warm: fault every page in
-    t0 = time.time()
-    s = 0.0
-    for _ in range(passes):
-        s += float(a.sum())
-    return time.time() - t0 + (s * 0)
-
-
-def _memrand_worker(args) -> float:
-    """Random-access (memory-level-parallelism) kernel: vectorized
-    dependent gathers over an array ≫ LLC — the access pattern of
-    map-side hash aggregation, which the SEQUENTIAL membw kernel does
-    not exercise. 4096 independent chains advance one random hop per
-    step, so the kernel is throughput-limited by how many outstanding
-    misses the socket sustains; contention here is the ceiling the
-    flagship's partial-agg stage inherits, and the r4 window-to-window
-    t32 variance (7.9–15.8 s under identical steal + sequential-bw
-    probes) is the kind of degradation only this pattern shows."""
-    import numpy as np
-
-    steps, n = args
-    rng = np.random.default_rng(0)
-    a = rng.permutation(n).astype(np.int64)
-    float(a.sum())  # fault every page in before timing
-    x = a[:4096].copy()
-    t0 = time.time()
-    for _ in range(steps):
-        x = a[x]
-    return time.time() - t0 + float(x[0]) * 0
-
-
-def _memrand_probe_worker(args) -> float:
-    """Probe-grade variant of _memrand_worker: identical dependent-
-    gather chase, but the permutation is a cheap multiplicative stride
-    (odd multiplier mod 2^k — a bijection, values scattered) instead of
-    rng.permutation — init cost ~0.2 s vs seconds under contention, so
-    the probe can run PER SAMPLE. The control keeps the true random
-    permutation for comparability with its r4 history."""
-    import numpy as np
-
-    steps, n = args
-    a = (np.arange(n, dtype=np.int64) * 2654435761) % n
-    float(a.sum())  # fault every page in before timing
-    x = a[:4096].copy()
-    t0 = time.time()
-    for _ in range(steps):
-        x = a[x]
-    return time.time() - t0 + float(x[0]) * 0
-
-
-def memrand_probe(n: int = 8) -> float:
-    """Point-in-time random-access (MLP) throughput probe, Mhops/s —
-    the quantity the SEQUENTIAL bw_probe cannot see. r4's estimator
-    shipped 0.271 off a 32-core sample that ran 22.7 s where its
-    same-condition neighbors ran 9.6/9.8 s, with clean steal AND held
-    bandwidth probes on every side: the degradation was random-access
-    latency (NOTES.md r4), the access pattern of map-side hash
-    aggregation. Recording this pre/post each scaling sample makes
-    that failure mode visible to pair validity (VERDICT r4 #2)."""
-    import multiprocessing as mp
-
-    steps = 20_000
-    with mp.Pool(n) as pool:
-        pool.map(_memrand_probe_worker, [(200, 1 << 25)] * n)  # warm
-        durs = sorted(pool.map(_memrand_probe_worker, [(steps, 1 << 25)] * n))
-    return round(n * steps * 4096 / durs[n // 2] / 1e6, 1)
-
-
-def bw_probe(n: int = 8) -> float:
-    """Point-in-time aggregate DRAM bandwidth estimate (GB/s): n workers
-    streaming 1 GB each, median worker rate × n. Recorded next to every
-    scaling sample so the artifact shows what the host was giving THAT
-    sample (host contention shifts minute to minute and hits the
-    32-core side ~4× harder than the 8-core side)."""
-    import multiprocessing as mp
-
-    with mp.Pool(n) as pool:
-        pool.map(_membw_worker, [(1, 64)] * n)  # warm the pool
-        durs = sorted(pool.map(_membw_worker, [(4, 256)] * n))
-    per_worker_gb = 4 * 256 / 1024
-    return round(n * per_worker_gb / durs[n // 2], 1)
-
-
-def control_efficiencies() -> dict:
-    """Hardware-ceiling controls, embedded in the artifact so the
-    scaling number carries its own context, re-measured in the same
-    window as the scaling samples: the identical fixed-per-worker-work
-    8→32 protocol on (a) a pure-CPU kernel (32 real cores per lscpu —
-    reads ~1.0 when the host is quiet, < 1 under neighbor contention /
-    steal, which bounds ANY job's efficiency in that window) and (b) a
-    DRAM-bandwidth kernel (streaming sums over arrays ≫ LLC) — the
-    ceiling every shared-memory shuffle/agg inherits on a single
-    socket; observed 0.13–0.99 across windows as host bandwidth
-    contention varies. Aggregate rate_n = n / median(per-worker
-    seconds); eff = rate32/(4·rate8). A multi-executor cluster
-    multiplies cores AND memory controllers instead of sharing them
-    (BENCH/BASELINE.md)."""
-    import multiprocessing as mp
-
-    out = {}
-    # FIXED PER-WORKER work (≈2 s each — long enough that scheduler/IPC
-    # noise is <5%): aggregate rate_n = n·W/median(worker seconds);
-    # eff = rate32/(4·rate8). Best-of-3 reps rides out steal bursts.
-    for name, worker, per, warm in (
-        ("cpu", _cpu_worker, 60_000_000, 1000),
-        ("membw", _membw_worker, (8, 256), (1, 64)),
-        # 2^25 entries = 256 MB per worker (≫ LLC); ~2 s per rep
-        ("memrand", _memrand_worker, (5000, 1 << 25), (100, 1 << 25)),
-    ):
-        rate = {}
-        for n in (8, 32):
-            with mp.Pool(n) as pool:
-                pool.map(worker, [warm] * n)
-                best = None
-                for _ in range(3):
-                    durs = sorted(pool.map(worker, [per] * n))
-                    med = durs[n // 2]
-                    best = min(best, med) if best else med
-                rate[n] = n / best
-        out[f"control_{name}_eff_8_to_32"] = round(rate[32] / (4 * rate[8]), 3)
-    out["control_freq_32_over_8"] = _freq_ratio()
-    return out
-
-
-def _freq_ratio() -> float | None:
-    """All-core-turbo control: mean per-core clock with 32 busy threads
-    over the busy-core clock with 8 busy threads (top-8 MHz readings —
-    idle cores clock down and must not dilute the 8-thread sample).
-    Strong-scaling efficiency is bounded by this ratio on any
-    turbo-capable part no matter how perfect the software; < 1.0 here
-    reattributes that share of the gap from the engine to the silicon."""
-    import multiprocessing as mp
-
-    def mhz() -> list[float]:
-        vals = []
-        try:
-            with open("/proc/cpuinfo") as f:
-                for line in f:
-                    if line.startswith("cpu MHz"):
-                        vals.append(float(line.split(":")[1]))
-        except Exception:
-            pass
-        return vals
-
-    def sample(n: int, top: int) -> float | None:
-        with mp.Pool(n) as pool:
-            res = pool.map_async(_cpu_worker, [30_000_000] * n)
-            time.sleep(1.0)  # let clocks settle under load
-            readings = sorted(mhz(), reverse=True)[:top]
-            res.wait()
-        return sum(readings) / len(readings) if readings else None
-
-    f8 = sample(8, 8)
-    f32 = sample(32, 32)
-    if not f8 or not f32:
-        return None
-    return round(f32 / f8, 3)
-
-
-
-def _compact(a: dict) -> dict:
-    """≤ ~1 KB summary of the artifact — the machine-readable last
-    line. Full data (per-sample scaling runs, probes, notes) lives in
-    BENCH/latest_full.json."""
-    c = {
-        "metric": a["metric"],
-        "value": a["value"],
-        "unit": a["unit"],
-        "queries": {k: round(v, 2) for k, v in a["queries"].items()},
-        "sf": a["sf"],
-    }
+def _compact(a: dict, artifact_file: str = "BENCH/latest_full.json") -> dict:
+    """Summary of the artifact for the last stdout line: the sections
+    present in ``a`` only, ≤ COMPACT_MAX_BYTES when serialized with
+    compact separators. The per-query map is the only unbounded part;
+    it is replaced by a note when the line would exceed the limit (full
+    data is always in ``artifact_file``)."""
+    c = {k: a[k] for k in ("metric", "value", "unit") if k in a}
+    if a.get("queries"):
+        c["queries"] = {k: round(v, 2) for k, v in a["queries"].items()}
+    c["sf"] = a["sf"]
     t = a.get("throughput") or {}
     if t:
         c["throughput"] = {
@@ -413,49 +201,16 @@ def _compact(a: dict) -> dict:
             )
             if s.get(k) is not None
         }
-    sc = a.get("scaling") or {}
-    if sc:
-        c["scaling"] = {
-            k: sc[k]
-            for k in (
-                "efficiency_8_to_32", "headline_valid", "n_valid_pairs",
-                "efficiency_vs_memrand_control",
-                "efficiency_cross_window",
-                "efficiency_median_8_to_32", "control_cpu_eff_8_to_32",
-                "control_membw_eff_8_to_32", "control_memrand_eff_8_to_32",
-                "control_freq_32_over_8", "local8_events_per_sec",
-                "local32_events_per_sec", "scaling_rows_in",
-                # cross-run best VALID capture over runs_history — the
-                # record is the sequence, and a noisy window must not
-                # hide a previously-achieved valid measurement
-                "best_valid_headline", "best_valid_vs_memrand",
-                "best_valid_run", "n_valid_runs",
-            )
-            if sc.get(k) is not None
-        }
-    c["full_artifact"] = "BENCH/latest_full.json"
-    # hard stdout guarantee (the driver parses a ~2 KB tail; r2's
-    # multi-KB line made the round unreadable): emit with compact
-    # separators, and if the line would still exceed 1500 bytes (the
-    # full battery+streaming+scaling line measured ~1.2 KB — 1500
-    # leaves the final line + newline comfortably inside the 2 KB tail)
-    # drop the queries map, the only unbounded part (full data is
-    # always in BENCH/latest_full.json)
-    if len(json.dumps(c, separators=(",", ":"))) > 1500:
+    c["full_artifact"] = artifact_file
+    if len(json.dumps(c, separators=(",", ":"))) > COMPACT_MAX_BYTES:
         c["queries"] = f"(dropped, {len(a['queries'])} entries — see full artifact)"
     return c
 
 
-def _timed(df) -> float:
-    t0 = time.time()
-    _noop(df)
-    return time.time() - t0
-
-
 def _steal_jiffies() -> int:
-    """Hypervisor steal time from /proc/stat — this VM sees bursts of
-    CPU steal that slow samples up to ~3×; reporting the delta lets a
-    reader discount noisy runs (see BENCH/BASELINE.md)."""
+    """Host-wide hypervisor steal, in jiffies, from /proc/stat (-1 when
+    unreadable). Callers record the delta across a sample so a reader
+    can discount samples slowed by steal bursts."""
     try:
         with open("/proc/stat") as f:
             return int(f.readline().split()[8])
@@ -464,19 +219,18 @@ def _steal_jiffies() -> int:
 
 
 def run_stream_bench(cores: int, max_files: int = 32) -> None:
-    """Streaming flagship (the BASELINE.json metric): the amplified
-    event stream through a watermarked sliding-window aggregate with
-    RocksDB state store, drained availableNow in multi-file batches.
-    Reports sustained rows/sec and p50/p99 micro-batch duration
-    (window-emit latency proxy: a window is emitted in the batch whose
-    watermark passes its end, so batch duration bounds emit latency —
-    run_live_latency measures the true emit latency on a wall clock).
+    """One streaming drain in this JVM; prints one JSON line. The
+    amplified event stream goes through a watermarked sliding-window
+    aggregate with the RocksDB state store, drained availableNow.
+    Reports sustained rows/s and p50/p99 micro-batch duration (a
+    window is emitted in the batch whose watermark passes its end, so
+    batch duration bounds emit latency; run_live_latency measures the
+    true emit latency on a wall clock).
 
     ``max_files`` bounds micro-batch size (256 input files / 32 = 8
-    batches): with 64 (4 batches) one steal-stalled straggler batch
-    dominated p99 (r2: p99 23.6 s vs p50 5.9 s); smaller batches cap
-    what a straggler can cost while per-batch RocksDB commit overhead
-    stays amortized."""
+    batches): smaller batches cap what one steal-stalled straggler
+    batch adds to p99, while per-batch state-commit overhead stays
+    amortized."""
     import shutil
     import tempfile
 
@@ -486,7 +240,6 @@ def run_stream_bench(cores: int, max_files: int = 32) -> None:
     from windflow_spark.session import get_spark
     from windflow_spark.streaming import engine as se
 
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
     spark = get_spark(
         "windflow-stream-bench", master=f"local[{cores}]",
         shuffle_partitions=cores, streaming=True,
@@ -517,9 +270,9 @@ def run_stream_bench(cores: int, max_files: int = 32) -> None:
                              timeout_sec=1200)
         return time.time() - t0
 
-    # NB: one drain per JVM — a second drain in the same JVM is SLOWER
-    # (lingering RocksDB instances from the first query); main() runs
-    # this subprocess twice and keeps the best
+    # one drain per JVM: a second drain in the same JVM runs slower
+    # (RocksDB instances of the first query linger), so
+    # run_streaming_section starts a fresh subprocess per rep
     el = drain("0")
     time.sleep(2)  # listener is async
     durs = sorted(r["batch_duration_ms"] for r in metrics.rows if r["num_input_rows"])
@@ -541,12 +294,13 @@ def run_stream_bench(cores: int, max_files: int = 32) -> None:
                 "state_store": "rocksdb",
                 "max_files_per_trigger": max_files,
             }
-        )
+        ),
+        flush=True,
     )
 
 
 def run_live_latency(
-    cores: int = 8,
+    cores: int = CPUS,
     duration_s: float = 24.0,
     win_s: int = 5,
     wm_s: int = 2,
@@ -555,9 +309,9 @@ def run_live_latency(
     trigger_ms: int = 500,
     state_store: str = "rocksdb",
 ) -> None:
-    """True window-emit latency on a live feed (VERDICT r2 #8 /
-    BASELINE.md metric 2): parquet files appended on a WALL clock with
-    event ts = now, through the same watermarked tumbling aggregate;
+    """True window-emit latency on a live feed; prints one JSON line.
+    Parquet files are appended on a wall clock with event ts = now and
+    go through a watermarked tumbling aggregate;
     per emitted window, emit latency = (wall time the emitting
     micro-batch completed) − (window end). Event time == wall time at
     generation, so the latency includes everything a user waits for:
@@ -580,10 +334,9 @@ def run_live_latency(
     from windflow_spark.session import get_spark
     from windflow_spark.streaming import engine as se
 
-    # state-store A/B (BASELINE.md "measure & report"): extra_conf is
-    # applied after the streaming block, so "hdfs" overrides the
-    # RocksDB provider back to the in-memory/HDFS-backed default —
-    # viable at this toy state size, the contrast the A/B measures
+    # state-store A/B: extra_conf is applied after the streaming
+    # block, so "hdfs" overrides the RocksDB provider back to the
+    # HDFS-backed default (viable at this toy state size)
     spark = get_spark(
         "windflow-live-latency", master=f"local[{cores}]",
         shuffle_partitions=cores, streaming=True,
@@ -689,88 +442,21 @@ def run_live_latency(
     print(json.dumps(res), flush=True)
 
 
-def main() -> None:
-    if "--single" in sys.argv:
-        i = sys.argv.index("--single")
-        reps = int(sys.argv[i + 2]) if len(sys.argv) > i + 2 else 3
-        run_single(int(sys.argv[i + 1]), reps)
-        return
-    if "--stream" in sys.argv:
-        run_stream_bench(int(sys.argv[sys.argv.index("--stream") + 1]))
-        return
-    if "--live" in sys.argv:
-        i = sys.argv.index("--live")
-        # consume argv tokens only while they parse as integers, so a
-        # short arg list followed by another flag doesn't crash
-        rest = []
-        for x in sys.argv[i + 1:i + 5]:
-            try:
-                rest.append(int(x))
-            except ValueError:
-                break
-        cores = rest[0] if len(rest) > 0 else 8
-        win_s = rest[1] if len(rest) > 1 else 5
-        wm_s = rest[2] if len(rest) > 2 else 2
-        trig = rest[3] if len(rest) > 3 else 500
-        j = i + 1 + len(rest)
-        store = (
-            sys.argv[j]
-            if j < len(sys.argv) and sys.argv[j] in ("rocksdb", "hdfs")
-            else "rocksdb"
-        )
-        run_live_latency(cores, win_s=win_s, wm_s=wm_s, trigger_ms=trig,
-                         state_store=store)
-        return
-    if "--scaling-only" in sys.argv or "--stream-only" in sys.argv:
-        # re-run ONLY one section (e.g. to retry in a quieter host
-        # window), preserving the other sections from the last full
-        # artifact
-        full = REPO / "BENCH" / "latest_full.json"
-        artifact = (
-            json.loads(full.read_text())
-            if full.exists()
-            else {"metric": "headline_battery_seconds", "value": None,
-                  "unit": "sec", "queries": {}, "sf": SF_DIR,
-                  "throughput": {}, "streaming": {}, "scaling": {}}
-        )
-        emit = _make_emit(artifact)
-        if "--scaling-only" in sys.argv:
-            run_scaling_section(artifact, emit, time.time())
-        else:
-            artifact["streaming"] = {
-                k: v for k, v in artifact["streaming"].items()
-                if k.startswith("emit")
-            }
-            run_streaming_section(artifact, emit, time.time())
-        emit()
-        return
-    do_scaling = (
-        "--no-scaling" not in sys.argv
-        and os.environ.get("SPARK_GRAFT_BENCH_FAST") != "1"
-    )
-    t_start = time.time()
-
+def run_battery(spark, names: list[str]) -> tuple[dict, dict]:
+    """Time each named query to a noop sink in ``spark``'s warm JVM
+    under the steal-stamped rep rule of the module docstring. Returns
+    ({query: seconds}, {query: steal jiffies of the kept rep})."""
     import __spark_entry__ as em
 
-    spark = _spark(f"local[{CPUS}]", CPUS)
     qs = em.queries()
-    # warmup: scan both tables + one agg so the first timed query
-    # doesn't absorb JIT/page-cache costs
+    # warm the scans and one aggregate so the first timed query does
+    # not absorb JIT and page-cache costs
     for t in ("events", "documents", "embeddings"):
         spark.read.parquet(f"{SF_DIR}/{t}.parquet").count()
     _noop(qs["win_tb_tumbling"](spark, SF_DIR))
-    # steal-stamped best-of-N per query (VERDICT r3 #2): hypervisor
-    # steal bursts hit single samples up to 2-3×, and r3's battery
-    # carried six regressions with no per-rep evidence to attribute
-    # them to the host. Each rep records its steal delta; the kept
-    # time is the fastest rep whose steal stayed under the cap (a 3rd
-    # rep runs only when the first two were both steal-drenched), and
-    # the chosen rep's steal lands in the full artifact beside the
-    # time so a slower number carries its own attribution.
-    BATTERY_STEAL_CAP = 500  # jiffies over a ≤ few-sec query ⇒ clean
     times: dict[str, float] = {}
-    battery_steal: dict[str, int] = {}
-    for name in HEADLINE:
+    steal: dict[str, int] = {}
+    for name in names:
         reps: list[tuple[float, int]] = []
         for i in range(4):
             s0 = _steal_jiffies()
@@ -778,15 +464,9 @@ def main() -> None:
             _noop(qs[name](spark, SF_DIR))
             el = time.time() - t0
             reps.append((el, _steal_jiffies() - s0))
-            # stop after 2 reps when one was steal-clean AND the query
-            # has stopped warming (rep didn't improve > 20% on the
-            # previous one). Cache-building queries (dedup_minhash_lsh
-            # persists its signature table; C2 keeps compiling its
-            # band-join stages for ~3 reps) otherwise record an
-            # arbitrary point of the warm-up curve — measured 5.58 /
-            # 1.16 / 0.89 / 0.67 s across 4 steal-clean reps, and the
-            # r4→r5 "regression" (0.64→0.88) was exactly this, not a
-            # plan change (NOTES.md r6).
+            # cache-building queries (a persisted signature table, stages
+            # still being JIT-compiled) keep speeding up for ~3 reps;
+            # stopping early would record a point of the warm-up curve
             if (
                 i >= 1
                 and any(st < BATTERY_STEAL_CAP for _, st in reps)
@@ -796,10 +476,13 @@ def main() -> None:
         clean = [r for r in reps if r[1] < BATTERY_STEAL_CAP]
         el, st = min(clean or reps)
         times[name] = round(el, 3)
-        battery_steal[name] = st
+        steal[name] = st
+    return times, steal
 
-    # flagship throughput (amplified stream); warm once, time once —
-    # the scaling section measures it more carefully in fresh JVMs
+
+def run_flagship(spark) -> dict:
+    """Flagship throughput over the amplified stream: one warm-up run,
+    then one timed run to a noop sink."""
     materialize_amplified(spark, SF_DIR, AMP)
     n_in = spark.read.parquet(_amp_path(AMP)).count()
     df = flagship(spark, AMP)
@@ -807,442 +490,131 @@ def main() -> None:
     t0 = time.time()
     _noop(df)
     fl_sec = time.time() - t0
-    throughput = {
+    return {
         "flagship_rows_in": n_in,
         "flagship_sec": round(fl_sec, 3),
         "events_per_sec": round(n_in / fl_sec),
         "amplification": AMP,
     }
-    spark.stop()
-
-    # incremental artifact emission: each section re-prints a COMPACT
-    # JSON line (flushed, ≤ ~1 KB) as it completes, so a driver-side
-    # timeout at any point still leaves a complete parseable artifact
-    # as the last line inside the driver's stdout tail window; the full
-    # artifact goes to BENCH/latest_full.json each time
-    # a --no-scaling full run must not clobber the cross-run sections
-    # (scaling.runs_history!) with empty skeletons — carry the previous
-    # artifact's sections forward, explicitly marked (same lesson as
-    # VERDICT r4 #3, one level up)
-    def _carry(section: str) -> dict:
-        if do_scaling:
-            return {}
-        prev = _PREV_FULL.get(section) or {}
-        return {**prev, "carried_from_previous_run": True} if prev else {}
-
-    artifact = {
-        "metric": "headline_battery_seconds",
-        "value": round(sum(times.values()), 3),
-        "unit": "sec",
-        "queries": times,
-        "queries_steal_jiffies": battery_steal,
-        "battery_steal_cap": BATTERY_STEAL_CAP,
-        "sf": SF_DIR,
-        "throughput": throughput,
-        "streaming": _carry("streaming"),
-        "scaling": _carry("scaling"),
-    }
-
-    emit = _make_emit(artifact)
-    emit()
-    if not do_scaling:
-        return
-    run_scaling_section(artifact, emit, t_start)
-    run_streaming_section(artifact, emit, t_start)
 
 
-def _load_prev_full() -> dict:
-    """Process-start snapshot of the previous full artifact, taken at
-    import time — BEFORE any emit() can overwrite the file. Sections
-    that carry state across runs (scaling.runs_history) must read this
-    snapshot, never the live file (VERDICT r4 #3: a full run's battery
-    emit clobbered the file first, so the scaling section read back
-    its own historyless skeleton and 5 runs of history vanished)."""
-    p = REPO / "BENCH" / "latest_full.json"
-    try:
-        return json.loads(p.read_text()) if p.exists() else {}
-    except Exception:
-        return {}
-
-
-_PREV_FULL = _load_prev_full()
-
-
-def _make_emit(artifact: dict):
-    # fast/verify runs (BENCH_FAST or a non-default SF) must not
-    # clobber the curated full-SF artifact
-    is_fast = (
-        os.environ.get("SPARK_GRAFT_BENCH_FAST") == "1"
-        or SF_DIR != "/root/testdata/sf0.1"
+def _subprocess_json(args: list[str], timeout: int) -> dict | None:
+    """Run ``bench.py *args`` in a fresh interpreter; its last JSON
+    stdout line, or None when it printed none."""
+    out = subprocess.run(
+        [sys.executable, __file__, *args],
+        capture_output=True, text=True, timeout=timeout, cwd=str(REPO),
+        env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
     )
-    name = "latest_fast.json" if is_fast else "latest_full.json"
+    lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
+    return json.loads(lines[-1]) if lines else None
 
+
+def run_streaming_section(artifact: dict, emit) -> None:
+    """Fill ``artifact["streaming"]``: best of 2 fresh-JVM drains at
+    CPUS cores, each stamped with the host steal delta across its
+    subprocess (a rep under STREAM_STEAL_CAP beats any rep over it),
+    then the live-feed emit-latency grid. The (5 s window, 2 s
+    watermark, 500 ms trigger, rocksdb) row supplies emit_p50/p99_ms;
+    the same row on hdfs is the state-store A/B."""
+    def rank(r: dict) -> tuple[bool, float]:
+        return (r["steal_jiffies"] >= STREAM_STEAL_CAP, r["sec"])
+
+    streaming: dict = {}
+    artifact["streaming"] = streaming
+    for _ in range(2):
+        s0 = _steal_jiffies()
+        cand = _subprocess_json(["--stream", str(CPUS)], timeout=1800)
+        if cand is None:
+            continue
+        cand["steal_jiffies"] = _steal_jiffies() - s0
+        if not streaming or rank(cand) < rank(streaming):
+            streaming.clear()
+            streaming.update(cand)
+            emit()
+    grid = []
+    for win_s, wm_s, trig_ms, store in (
+        (5, 2, 500, "rocksdb"),
+        (5, 1, 250, "rocksdb"),
+        (10, 2, 1000, "rocksdb"),
+        (5, 2, 500, "hdfs"),
+    ):
+        live = _subprocess_json(
+            ["--live", str(CPUS), str(win_s), str(wm_s), str(trig_ms), store],
+            timeout=600,
+        )
+        if live is None:
+            continue
+        grid.append(live)
+        if (win_s, wm_s, trig_ms, store) == (5, 2, 500, "rocksdb"):
+            streaming["emit_latency"] = live
+            streaming["emit_p50_ms"] = live.get("emit_p50_ms")
+            streaming["emit_p99_ms"] = live.get("emit_p99_ms")
+        emit()
+    streaming["emit_latency_grid"] = grid
+    emit()
+
+
+def _make_emit(artifact: dict, name: str):
     def emit() -> None:
-        full = REPO / "BENCH" / name
-        full.parent.mkdir(exist_ok=True)
-        full.write_text(json.dumps(artifact, indent=1))
-        print(json.dumps(_compact(artifact), separators=(",", ":")), flush=True)
+        path = REPO / "BENCH" / name
+        path.parent.mkdir(exist_ok=True)
+        path.write_text(json.dumps(artifact, indent=1))
+        print(json.dumps(_compact(artifact, f"BENCH/{name}"),
+                         separators=(",", ":")), flush=True)
 
     return emit
 
 
-PAIR_STEAL_CAP = 1000  # jiffies over a full sample subprocess ⇒ clean
-
-
-def headline_from_pairs(samples: list[dict], steal_cap: int = PAIR_STEAL_CAP,
-                        bw_tol: float = 1.2, bw_hold: float = 0.7,
-                        mr_tol: float = 1.2, mr_hold: float = 0.7,
-                        coherence: float = 1.5) -> dict:
-    """Condition-matched headline estimator (VERDICT r3 #1, hardened
-    r5 per VERDICT r4 #2): adjacent (32, 8) sample pairs, each pair
-    VALID only when
-    (a) both sides' steal is under ``steal_cap``,
-    (b) their pre-sample bandwidth probes agree within ``bw_tol``,
-    (c) each side's POST-sample bandwidth probe held ≥ ``bw_hold`` of
-        its pre-sample probe (r4 failure: bandwidth collapsing
-        MID-sample, pre 50.8 → post 23.1, with clean steal),
-    (d) same agreement + hold on the RANDOM-ACCESS probes (mr_*,
-        Mhops/s from memrand_probe) when present — the r4 headline
-        shipped 0.271 off a 32-core sample whose slowness was
-        invisible to (a)-(c) because the degradation was memory
-        LATENCY, which the sequential bandwidth kernel can't see, and
-    (e) COHERENCE: neither side's wall time exceeds ``coherence`` ×
-        the fastest clean-steal sample of the same core count in the
-        run — the direct signature of the invisible degradation (r4:
-        t32 22.671 s against same-condition neighbors at 9.631/9.809).
-    Absent probes can't disprove and are accepted (back-compat with
-    r3/r4 sample records).
-
-    Headline = max over valid pairs, clamped at 1.0, and it is only
-    ``headline_valid`` when AT LEAST TWO pairs validate — a single
-    surviving pair is exactly the r4 artifact shape (one bad pair
-    outliving the filters), so with ≤ 1 valid pair the median over
-    ALL pairs ships with headline_valid=false and the run should be
-    retried (--scaling-only) in a quieter window."""
-    fastest: dict[int, float] = {}
-    for s in samples:
-        if s["steal_jiffies"] < steal_cap:
-            fastest[s["cores"]] = min(fastest.get(s["cores"], 1e18), s["sec"])
-
-    def _pre_match(s8, s32, key, tol):
-        vals = [s.get(key) for s in (s8, s32)]
-        if any(v is None for v in vals):
-            return True  # absent ⇒ can't disprove
-        lo, hi = sorted(vals)
-        return lo > 0 and hi / lo <= tol
-
-    def _held(s, pre_key, post_key, hold):
-        pre, post = s.get(pre_key), s.get(post_key)
-        if pre is None or post is None or pre <= 0:
-            return True  # absent ⇒ can't disprove
-        return post >= hold * pre
-
-    pairs = []
-    for i in range(1, len(samples)):
-        a, b = samples[i - 1], samples[i]
-        if {a["cores"], b["cores"]} == {8, 32}:
-            s32 = a if a["cores"] == 32 else b
-            s8 = b if b["cores"] == 8 else a
-            coherent = all(
-                s["sec"] <= coherence * fastest.get(s["cores"], s["sec"])
-                for s in (s8, s32)
-            )
-            p = {
-                "eff": round(s8["sec"] / (4 * s32["sec"]), 3),
-                "steal": [s8["steal_jiffies"], s32["steal_jiffies"]],
-                "bw_pre": [s8["bw_pre_gbps"], s32["bw_pre_gbps"]],
-                "bw_post": [s8.get("bw_probe_gbps"), s32.get("bw_probe_gbps")],
-                "coherent": coherent,
-                "valid": (
-                    max(s8["steal_jiffies"], s32["steal_jiffies"]) < steal_cap
-                    and _pre_match(s8, s32, "bw_pre_gbps", bw_tol)
-                    and all(_held(s, "bw_pre_gbps", "bw_probe_gbps", bw_hold)
-                            for s in (s8, s32))
-                    and _pre_match(s8, s32, "mr_pre_mhps", mr_tol)
-                    and all(_held(s, "mr_pre_mhps", "mr_post_mhps", mr_hold)
-                            for s in (s8, s32))
-                    and coherent
-                ),
-            }
-            if any(s.get("mr_pre_mhps") is not None for s in (s8, s32)):
-                p["mr_pre"] = [s8.get("mr_pre_mhps"), s32.get("mr_pre_mhps")]
-                p["mr_post"] = [s8.get("mr_post_mhps"), s32.get("mr_post_mhps")]
-            pairs.append(p)
-    if not pairs:
-        return {}
-    out = {"pairs": pairs, "pair_steal_cap": steal_cap}
-    valid = [p["eff"] for p in pairs if p["valid"]]
-    out["n_valid_pairs"] = len(valid)
-    if len(valid) >= 2:
-        out["efficiency_8_to_32"] = min(1.0, max(valid))
-        out["headline_valid"] = True
-    else:
-        effs = sorted(p["eff"] for p in pairs)
-        out["efficiency_8_to_32"] = min(1.0, effs[len(effs) // 2])
-        out["headline_valid"] = False
-    return out
-
-
-def run_scaling_section(artifact: dict, emit, t_start: float) -> None:
-    # scaling: best-of-N fresh JVMs per size (±20% VM timing noise +
-    # hypervisor steal bursts make single samples read up to 3× slow);
-    # 32-core samples lead the order — a slow t32 biases the ratio DOWN,
-    # so it needs the most repeats before any time cutoff. The hardware
-    # ceiling controls ship inside the artifact (control_* keys).
-    # cross-run scaling history accumulates (the host's invisible
-    # degradation mode makes any single run an arbitrary point of a
-    # wide range — see BENCH/BASELINE.md r4): carry runs_history from
-    # the PROCESS-START snapshot of the previous artifact — reading
-    # the file here is too late, emit() has already overwritten it
-    # during the battery/throughput sections (the r4 clobber,
-    # VERDICT r4 "what's wrong" #2)
-    prev_hist = dict(_PREV_FULL.get("scaling", {}).get("runs_history", {}))
-    scaling: dict = {"samples": [], "runs_history": prev_hist, "note": (
-        "best-of-N fresh JVMs; HEADLINE efficiency_8_to_32 = best "
-        "VALID adjacent same-window (32,8) sample pair, clamped at "
-        "1.0 — a pair is valid only when both sides' steal < "
-        "pair_steal_cap, their bw_pre AND mr_pre probes agree within "
-        "20%, both sides' post-sample bw/mr probes held >= 0.7x pre "
-        "(mr_* = random-access Mhops/s, the latency axis the "
-        "sequential probe misses), and both wall times are coherent "
-        "(<= 1.5x the fastest clean same-core sample). "
-        "headline_valid requires >= 2 valid pairs — one surviving "
-        "pair is the r4 artifact shape, so <= 1 ships the median over "
-        "all pairs with headline_valid=false (retry --scaling-only "
-        "in a quieter window). "
-        "efficiency_cross_window = best(t32_tput)/(4*best(t8_tput)); "
-        "eff_median over per-sample "
-        "throughputs. control_cpu = pure-CPU 8→32 ceiling (~1.0 ⇒ cores "
-        "real/quiet), control_membw = DRAM-bandwidth ceiling this "
-        "single-socket VM imposes on shuffle/agg-heavy work. "
-        "efficiency_vs_memrand_control = headline / max(pre, post "
-        "memrand control) — the fraction of what this host's "
-        "random-access ceiling (the flagship's binding resource) "
-        "permits in the measurement window. best_valid_* = the best "
-        "condition-matched capture across the CARRIED runs_history "
-        "(cross-run, clearly labeled — the record is the sequence; a "
-        "noisy window must not hide a previously-achieved valid "
-        "measurement), ranked by vs_memrand then raw headline; see "
-        "BENCH/BASELINE.md for the estimator-choice protocol")}
-    scaling.update(control_efficiencies())
-    artifact["scaling"] = scaling
-    emit()
-    # scaling input = 16× the throughput input: fixed job overheads
-    # (stage barriers, scheduling) dominate small runs and understate
-    # strong scaling. The time-clustered layout (r4) made the flagship
-    # 2.4× faster, putting the old 409.6 M-row input back in the
-    # overhead-dominated regime at 32 cores (~3.3 s) — 1.64 B rows
-    # (~19 GB sorted parquet, page-cache resident) restores a
-    # work-bound t32 of ~13 s
-    scale_amp = AMP * 16
-    scaling["scaling_rows_in"] = None
-    best: dict[int, float] = {}
-
-    # bounded quiet-window gating: host DRAM bandwidth oscillates
-    # 13→57 GB/s on ~10-minute timescales (neighbor contention), and a
-    # starved window wrecks the 32-core side ~4× harder than the 8-core
-    # side. Before each sample, wait (30 s steps, ≤120 s per sample,
-    # ≤420 s total across the run) for the probe to read ≥ 40 GB/s; the
-    # pre-sample probe is recorded per sample (bw_pre_gbps) so the
-    # artifact shows what each sample actually got. Samples still run
-    # when the wait budget is exhausted — gating trades a little wall
-    # clock for samples that measure the ENGINE, not the neighbors.
-    quiet_budget = 420.0
-
-    def wait_quiet(min_gbps: float = 40.0, per_sample: float = 120.0) -> float:
-        nonlocal quiet_budget
-        waited = 0.0
-        bw = bw_probe()
-        while bw < min_gbps and waited < per_sample and quiet_budget > 0:
-            time.sleep(30)
-            waited += 30
-            quiet_budget -= 30
-            bw = bw_probe()
-        return bw
-
-    for cores, reps in ((32, 3), (8, 3), (32, 3), (8, 3), (32, 3), (8, 3)):
-        if time.time() - t_start > 2000 and 8 in best and 32 in best:
+def _live_args(argv: list[str]) -> tuple[list[int], str]:
+    """Parse ``--live`` arguments: up to 4 leading integers (cores, win,
+    watermark, trigger ms), then an optional state store name."""
+    ints = []
+    for x in argv[:4]:
+        try:
+            ints.append(int(x))
+        except ValueError:
             break
-        bw_pre = wait_quiet()
-        mr_pre = memrand_probe()  # random-access (latency) probe — the
-        # quantity the sequential bw probe misses (VERDICT r4 #2)
-        out = subprocess.run(
-            [sys.executable, __file__, "--single", str(cores), str(reps)],
-            capture_output=True, text=True, timeout=1800,
-            cwd=str(REPO),
-            env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR,
-                 "SPARK_GRAFT_BENCH_AMP": str(scale_amp)},
-        )
-        lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-        if not lines:
-            continue
-        r = json.loads(lines[-1])
-        tput = r["rows_in"] / r["sec"]
-        best[cores] = max(best.get(cores, 0.0), tput)
-        scaling["scaling_rows_in"] = r["rows_in"]
-        scaling["samples"].append(
-            {"cores": cores, "sec": round(r["sec"], 3),
-             "steal_jiffies": r.get("steal_jiffies", -1),
-             "bw_pre_gbps": bw_pre,
-             "bw_probe_gbps": bw_probe(),
-             "mr_pre_mhps": mr_pre,
-             "mr_post_mhps": memrand_probe()}
-        )
-        if 8 in best and 32 in best:
-            scaling["local8_events_per_sec"] = round(best[8])
-            scaling["local32_events_per_sec"] = round(best[32])
-            scaling["efficiency_cross_window"] = round(best[32] / (4 * best[8]), 3)
-            med = {}
-            for n in (8, 32):
-                ts = sorted(x["sec"] for x in scaling["samples"] if x["cores"] == n)
-                med[n] = r["rows_in"] / ts[len(ts) // 2]
-            scaling["efficiency_median_8_to_32"] = round(med[32] / (4 * med[8]), 3)
-            # HEADLINE estimator (efficiency_8_to_32) = best VALID
-            # ADJACENT same-window (32, 8) pair. Adjacent pairing is
-            # the right idea (paired samples SHOULD share host
-            # conditions — cross-window best-of mixes a quiet 8-core
-            # window with a busy 32-core one and reads anywhere in
-            # 0.3–1.2) but r3 proved adjacency alone doesn't guarantee
-            # matched conditions: max-of-pairs picked a pair whose
-            # 8-core sample ran under 39k steal jiffies against a
-            # 24k-steal 32-core sample and reported a physically
-            # impossible 1.222 (VERDICT r3 #1). A pair is now VALID
-            # only when both samples measured the ENGINE, not the
-            # neighbors: each side's steal below PAIR_STEAL_CAP and
-            # the two sides' pre-sample bandwidth probes within 20% of
-            # each other. The headline is max over valid pairs,
-            # clamped at 1.0 (strong-scaling efficiency > 1 is
-            # measurement error by definition), with headline_valid
-            # recording whether any condition-matched pair existed —
-            # when none did, the median pair ships clamped with
-            # headline_valid=false and the run should be retried
-            # (--scaling-only) in a quieter window. The in-artifact
-            # CPU/membw controls justify the estimator per run: when
-            # control_membw itself reads < 0.8, the DRAM ceiling — not
-            # the engine — bounds any single-socket measurement (a
-            # real N→4N cluster multiplies memory controllers too).
-            scaling.update(headline_from_pairs(scaling["samples"]))
-            emit()
-    # post-window controls + CONTROL-NORMALIZED headline (VERDICT r5
-    # #2): the section spans up to ~35 min, so re-measure the hardware
-    # ceilings AFTER sampling; the normalized headline divides by the
-    # BINDING control — memrand, the random-access ceiling the
-    # flagship's hash-agg stage is bound by (r5: app reaches ~75-80% of
-    # the memrand control) — answering "what fraction of what this
-    # single-socket host permits" even when the raw >= 0.8 target is
-    # physically out of reach in the window. max(pre, post) is the
-    # conservative denominator (larger ceiling -> smaller claim).
-    if "efficiency_8_to_32" in scaling:
-        post = control_efficiencies()
-        scaling.update({f"{k}_post": v for k, v in post.items()})
-        ctrls = [c for c in (scaling.get("control_memrand_eff_8_to_32"),
-                             post.get("control_memrand_eff_8_to_32"))
-                 if c and c > 0]
-        if ctrls:
-            scaling["memrand_control_binding"] = max(ctrls)
-            scaling["efficiency_vs_memrand_control"] = round(
-                min(1.0, scaling["efficiency_8_to_32"] / max(ctrls)), 3
-            )
+    rest = argv[len(ints):]
+    return ints, rest[0] if rest and rest[0] in ("rocksdb", "hdfs") else "rocksdb"
+
+
+def main(argv: list[str]) -> None:
+    if "--stream" in argv:
+        run_stream_bench(int(argv[argv.index("--stream") + 1]))
+        return
+    if "--live" in argv:
+        ints, store = _live_args(argv[argv.index("--live") + 1:])
+        kw = dict(zip(("cores", "win_s", "wm_s", "trigger_ms"), ints))
+        run_live_latency(**kw, state_store=store)
+        return
+    stream_only = "--stream-only" in argv
+    names = [a for a in argv if not a.startswith("--")]
+    unknown = sorted(set(names) - set(HEADLINE))
+    if unknown:
+        raise SystemExit(f"unknown queries {unknown}; choose from {HEADLINE}")
+    full = not (stream_only or names or "SPARK_GRAFT_SF_DIR" in os.environ)
+    artifact: dict = {"sf": SF_DIR}
+    emit = _make_emit(artifact, "latest_full.json" if full else "latest_fast.json")
+    if not stream_only:
+        spark = _spark(f"local[{CPUS}]", CPUS)
+        times, steal = run_battery(spark, names or HEADLINE)
+        artifact.update({
+            "metric": "headline_battery_seconds",
+            "value": round(sum(times.values()), 3),
+            "unit": "sec",
+            "queries": times,
+            "queries_steal_jiffies": steal,
+            "battery_steal_cap": BATTERY_STEAL_CAP,
+        })
+        if not names:
+            artifact["throughput"] = run_flagship(spark)
+        spark.stop()
         emit()
-    # append THIS run to the carried history (r4 lesson: no single run
-    # is trustworthy alone — the record is the sequence), newest-last,
-    # bounded at 12 entries
-    if "efficiency_8_to_32" in scaling:
-        hist = scaling["runs_history"]
-        hist["run_" + time.strftime("%Y%m%d_%H%M%S")] = {
-            "headline": scaling["efficiency_8_to_32"],
-            "valid": scaling.get("headline_valid"),
-            "n_valid_pairs": scaling.get("n_valid_pairs"),
-            "cross_window": scaling.get("efficiency_cross_window"),
-            "median": scaling.get("efficiency_median_8_to_32"),
-            "controls": {
-                "cpu": scaling.get("control_cpu_eff_8_to_32"),
-                "membw": scaling.get("control_membw_eff_8_to_32"),
-                "memrand": scaling.get("control_memrand_eff_8_to_32"),
-                "memrand_post": scaling.get("control_memrand_eff_8_to_32_post"),
-            },
-            "vs_memrand": scaling.get("efficiency_vs_memrand_control"),
-        }
-        for k in list(hist)[:-12]:
-            del hist[k]
-        # cross-run BEST VALID capture (clearly labeled as cross-run):
-        # host windows oscillate on ~10-min timescales, so the latest
-        # attempt's headline says as much about the neighbors as about
-        # the engine — surface the best condition-matched (valid)
-        # capture in the carried history beside it. Ranked by the
-        # control-normalized figure (the sandbox proxy for the cluster
-        # criterion, BENCH/BASELINE.md r6), raw headline as tiebreak.
-        valid = {k: v for k, v in hist.items() if v.get("valid")}
-        if valid:
-            bk = max(
-                valid,
-                key=lambda k: (valid[k].get("vs_memrand") or 0.0,
-                               valid[k].get("headline") or 0.0),
-            )
-            scaling["best_valid_run"] = bk
-            scaling["best_valid_headline"] = valid[bk]["headline"]
-            scaling["best_valid_vs_memrand"] = valid[bk].get("vs_memrand")
-            scaling["n_valid_runs"] = len(valid)
-        emit()
-
-
-def run_streaming_section(artifact: dict, emit, t_start: float) -> None:
-    for _ in range(2):  # streaming drain: best of 2 fresh JVMs
-        out = subprocess.run(
-            [sys.executable, __file__, "--stream", str(CPUS)],
-            capture_output=True, text=True, timeout=1800, cwd=str(REPO),
-            env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
-        )
-        lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-        if lines:
-            cand = json.loads(lines[-1])
-            if not artifact["streaming"].get("sec") or cand["sec"] < artifact["streaming"]["sec"]:
-                cand.update(
-                    {k: artifact["streaming"][k]
-                     for k in ("emit_latency", "emit_p50_ms", "emit_p99_ms")
-                     if k in artifact["streaming"]}
-                )
-                artifact["streaming"] = cand
-                emit()
-        if time.time() - t_start > 1900:
-            break
-    # true window-emit latency on a live wall-clock feed (fresh JVM per
-    # config). A (cores × window × watermark × trigger × state-store)
-    # sweep (VERDICT r3 #7, corners completed per VERDICT r4 #8)
-    # characterizes the latency floor: emit latency ≈ watermark delay
-    # + trigger cadence + batch time by construction, so the sweep
-    # shows which term binds at each setting. The (8, 5 s, 2 s,
-    # 500 ms, rocksdb) row is the headline (same config as r2-r4);
-    # the same row on hdfs is the state-store A/B, and the 32-core
-    # 1 s-watermark row probes the floor at full parallelism.
-    grid = []
-    for cores, win_s, wm_s, trig_ms, store in (
-        (8, 5, 2, 500, "rocksdb"),
-        (8, 5, 1, 250, "rocksdb"),
-        (8, 10, 2, 1000, "rocksdb"),
-        (32, 5, 1, 500, "rocksdb"),
-        (8, 5, 2, 500, "hdfs"),
-    ):
-        out = subprocess.run(
-            [sys.executable, __file__, "--live", str(cores),
-             str(win_s), str(wm_s), str(trig_ms), store],
-            capture_output=True, text=True, timeout=600, cwd=str(REPO),
-            env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
-        )
-        lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-        if lines:
-            live = json.loads(lines[-1])
-            grid.append(live)
-            if (cores, win_s, wm_s, trig_ms, store) == (8, 5, 2, 500, "rocksdb"):
-                artifact["streaming"]["emit_latency"] = live
-                artifact["streaming"]["emit_p50_ms"] = live.get("emit_p50_ms")
-                artifact["streaming"]["emit_p99_ms"] = live.get("emit_p99_ms")
-            emit()
-        if time.time() - t_start > 2600:
-            break
-    artifact["streaming"]["emit_latency_grid"] = grid
-    emit()
+        if names:
+            return
+    run_streaming_section(artifact, emit)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -512,6 +512,27 @@ def test_repetition_features_hand_fixture(spark):
     assert pd.isna(got.loc[4, "top_bigram_frac"])
 
 
+def test_repetition_features_null_text_yields_null(spark):
+    """A NULL text gives NULL (not NaN, not an error) for all five
+    features and leaves the other rows' features unchanged."""
+    feats = ["top_token_frac", "top_bigram_frac", "distinct_token_ratio",
+             "dup_line_frac", "dup_line_char_frac"]
+    df = spark.createDataFrame(
+        [(1, "a a b"), (2, None), (3, "x\nx")], "doc_id long, text string"
+    )
+    out = text.repetition_features(df)
+    null_row = out.filter(F.col("doc_id") == 2).select(
+        *[F.col(c).isNull().alias(c) for c in feats]
+    ).collect()
+    assert null_row and all(null_row[0]), null_row
+    got = out.filter(F.col("doc_id") != 2).orderBy("doc_id").toPandas()
+    want = (
+        text.repetition_features(df.filter(F.col("doc_id") != 2))
+        .orderBy("doc_id").toPandas()
+    )
+    assert_frames_equal(got, want, ["doc_id"])
+
+
 def test_repetition_features_plan_is_shuffle_free(docs):
     out = text.repetition_features(docs).select("doc_id", "top_token_frac")
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -347,7 +347,9 @@ def connected_components(
     the exact fixpoint (changed == 0 — an honest count, not a
     checksum). Each round is two shuffles (a neighbor-min aggregate +
     the jump join); lineage is truncated per round with
-    localCheckpoint so the plan doesn't grow exponentially. Skew note:
+    localCheckpoint so the plan doesn't grow exponentially; a
+    superseded round's checkpoint blocks are freed by Spark's
+    ContextCleaner once its frame is garbage-collected. Skew note:
     the jump join keys by current label, which concentrates on big
     components' roots — AQE skew-split handles it (the join is 2-col
     lhs × 2-col rhs, salting-free by design).
@@ -401,15 +403,6 @@ def connected_components(
             .limit(1)
             .count()
         )
-        # the superseded round's checkpointed RDD is dead once `jump`
-        # replaces it — unpersist so a slow-converging graph doesn't
-        # accumulate O(rounds) checkpoints in executor storage
-        # (ADVICE r7 #3); the initial `labels` has no checkpoint to
-        # free only on round 0's entry, so this is safe unconditionally
-        try:
-            labels.unpersist()
-        except Exception:
-            pass
         labels = jump
         if changed == 0:
             break
@@ -417,12 +410,6 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds"
         )
-    try:
-        # the symmetrized edge checkpoint is dead once the loop exits:
-        # the returned frame reads only the final labels checkpoint
-        sym.unpersist()
-    except Exception:
-        pass
     return labels.select(
         F.col("_id").alias("id"), F.col("_c").alias("component")
     )
